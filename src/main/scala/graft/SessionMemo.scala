@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.SparkSession
 
@@ -21,8 +22,8 @@ import org.apache.spark.sql.SparkSession
   * unrelated keys that hashed to the same bin and throwing
   * IllegalStateException on any recursive use.
   *
-  * Lifecycle: `SparkContext` stop evicts every session sharing it (the
-  * ApplicationEnd listener). Sessions created via `newSession`/
+  * Lifecycle: `SparkContext` stop evicts every session sharing it (one
+  * ApplicationEnd listener per context). Sessions created via `newSession`/
   * `cloneSession` share one context and have no end-of-life event of
   * their own, so a long-lived context that churns through child sessions
   * should call [[evict]] on each child when done with it — entries hold
@@ -35,13 +36,19 @@ import org.apache.spark.sql.SparkSession
 class SessionMemo[K, V] {
   private final class Holder(f: () => V) { lazy val value: V = f() }
   private val m = new java.util.concurrent.ConcurrentHashMap[(SparkSession, K), Holder]
-  private val hooked = java.util.concurrent.ConcurrentHashMap.newKeySet[SparkSession]()
+  // One stop listener per context, holding the context only: a listener
+  // per session would stay registered on the bus after [[evict]] and pin
+  // the session it captured until the context stops.
+  private val hooked = java.util.concurrent.ConcurrentHashMap.newKeySet[SparkContext]()
 
   def getOrCompute(spark: SparkSession, key: K)(f: => V): V = {
-    if (hooked.add(spark))
-      spark.sparkContext.addSparkListener(new SparkListener {
-        override def onApplicationEnd(end: SparkListenerApplicationEnd): Unit =
-          evict(spark)
+    val sc = spark.sparkContext
+    if (hooked.add(sc))
+      sc.addSparkListener(new SparkListener {
+        override def onApplicationEnd(end: SparkListenerApplicationEnd): Unit = {
+          m.keySet.removeIf(_._1.sparkContext eq sc)
+          hooked.remove(sc)
+        }
       })
     val fresh = new Holder(() => f)
     val holder = m.putIfAbsent((spark, key), fresh) match {
@@ -62,10 +69,8 @@ class SessionMemo[K, V] {
   /** Drop every entry owned by `spark`. Runs automatically at context
     * stop; call directly when discarding a `newSession` child sharing a
     * still-live context. */
-  def evict(spark: SparkSession): Unit = {
+  def evict(spark: SparkSession): Unit =
     m.keySet.removeIf(_._1 eq spark)
-    hooked.remove(spark)
-  }
 
   /** Visible for tests: live entry count for one session. */
   def sizeFor(spark: SparkSession): Int = {

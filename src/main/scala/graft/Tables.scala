@@ -1,18 +1,29 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Catalog over the driver-generated parquet testdata (TESTDATA.md).
   *
-  * The returned DataFrame is memoized per (session, sfDir, table). What is
-  * cached is the LOGICAL PLAN OBJECT only — never materialized data — so
-  * Catalyst still sees the raw scan node and pushes filters / prunes columns
-  * into the vectorized parquet reader exactly as with a fresh read. What the
-  * memo removes is the per-call driver work of `spark.read.parquet`: file
-  * listing and footer/schema inference, which at ~200 table reads across a
-  * 92-query bench run is pure fixed overhead (SURVEY §6). At 100 TB the
-  * same pattern holds — one resolved relation per table, shared by every
-  * query plan, with the scan node as the pushdown target.
+  * Opening a table has two costs, cached at two scopes:
+  *
+  *  - Per PROCESS, the parquet schema ([[read]]). Spark infers a file's
+  *    schema with a Spark job of its own (footer reads across the
+  *    cluster), once per `spark.read.parquet` call. The inferred
+  *    `StructType` is cached process-wide per file, so every session after
+  *    the first that opens an unchanged file passes it to the reader and
+  *    runs no job. An entry is invalidated when the file's length or
+  *    modification time changes (one `getFileStatus` per open), or when the
+  *    session's parquet reader settings differ from the ones the schema was
+  *    inferred under. Directories are never cached: their files can change
+  *    without their own status changing.
+  *  - Per SESSION, the DataFrame ([[apply]]), memoized per (session, sfDir,
+  *    table) in a [[SessionMemo]], so it is released when the session's
+  *    context stops or on [[evict]]. What is cached is the LOGICAL PLAN
+  *    OBJECT only — never materialized data — so Catalyst still sees the raw
+  *    scan node and pushes filters / prunes columns into the vectorized
+  *    parquet reader exactly as with a fresh read; the memo also gives the
+  *    object identity [[SessionMemo]] callers key on.
   */
 object Tables {
   import org.apache.spark.sql.functions._
@@ -21,11 +32,39 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  private val memo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]
+  private[graft] val memo = new SessionMemo[(String, String), DataFrame]
+
+  /** (qualified path, parquet reader settings) -> (length, mtime, schema).
+    * Keyed without the file stamp, so a rewritten file replaces its entry
+    * instead of adding one. */
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[(String, Map[String, String]), (Long, Long, StructType)]
+
+  /** `spark.read.parquet(path)`, with the schema taken from the process-wide
+    * cache when this process has already read the unchanged file under the
+    * same parquet reader settings. A missing path falls through to Spark's
+    * own error. */
+  def read(spark: SparkSession, path: String): DataFrame = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val st = try Some(p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p))
+      catch { case _: java.io.FileNotFoundException => None }
+    st.filter(_.isFile) match {
+      case None => spark.read.parquet(path)
+      case Some(f) =>
+        val key = (f.getPath.toString, spark.conf.getAll.filter(_._1.contains("parquet")))
+        Option(schemas.get(key)) match {
+          case Some((len, mtime, s)) if len == f.getLen && mtime == f.getModificationTime =>
+            spark.read.schema(s).parquet(path)
+          case _ =>
+            val df = spark.read.parquet(path)
+            schemas.put(key, (f.getLen, f.getModificationTime, df.schema))
+            df
+        }
+    }
+  }
 
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    memo.computeIfAbsent((spark, sfDir, name), { _ =>
+    memo.getOrCompute(spark, (sfDir, name)) {
       if (name == "events") {
         // The generator has shipped `ts` three ways across rounds — parquet
         // TIMESTAMP(NANOS) (Spark 4 rejects it unless read as raw Long via
@@ -47,7 +86,7 @@ object Tables {
         require(spark.conf.get("spark.sql.session.timeZone") == "UTC",
           "events loader requires spark.sql.session.timeZone=UTC (pin it " +
             "at session construction); refusing to mutate session config")
-        val raw = spark.read.parquet(s"$sfDir/events.parquet")
+        val raw = read(spark, s"$sfDir/events.parquet")
         raw.schema("ts").dataType match {
           case org.apache.spark.sql.types.LongType =>
             raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
@@ -56,7 +95,12 @@ object Tables {
           case _ => raw
         }
       } else {
-        spark.read.parquet(s"$sfDir/$name.parquet")
+        read(spark, s"$sfDir/$name.parquet")
       }
-    })
+    }
+
+  /** Drop every table `spark` has loaded — for a caller discarding a
+    * `newSession` child whose context stays live (context stop evicts on
+    * its own). */
+  def evict(spark: SparkSession): Unit = memo.evict(spark)
 }

@@ -42,16 +42,24 @@ object FreqItemsets {
     *         them) must use the distributed path; the declared query
     *         filters to sizes ≥ 2 on both paths. */
   def run(spark: SparkSession, baskets: DataFrame, minSupport: Double,
-          localThreshold: Long = 1L << 20): DataFrame = {
+          localThreshold: Long = 1L << 20): DataFrame =
+    runWith(spark, baskets, _ => minSupport, localThreshold)
+
+  /** As [[run]], with the support bar a function of the basket count n.
+    * n comes from the same aggregate that proves the budget, so a caller
+    * whose bar depends on n (`2.0 / n`) needs no count job of its own. */
+  def runWith(spark: SparkSession, baskets: DataFrame, minSupportOf: Long => Double,
+              localThreshold: Long = 1L << 20): DataFrame = {
     import spark.implicits._
-    val budget = baskets
+    val (n, occ, pairs) = baskets
       .select(size($"items").cast("long").as("sz"))
-      .agg(coalesce(sum($"sz"), lit(0L)).as("occ"),
+      .agg(count(lit(1)).as("n"),
+           coalesce(sum($"sz"), lit(0L)).as("occ"),
            coalesce(sum(expr("sz * (sz - 1L) div 2L")), lit(0L)).as("pairs"))
-      .as[(Long, Long)].head()
-    if (localThreshold > 0 && budget._1 <= localThreshold &&
-        budget._2 <= 8L * localThreshold) {
-      val n = baskets.count()
+      .as[(Long, Long, Long)].head()
+    val minSupport = minSupportOf(n)
+    if (localThreshold > 0 && occ <= localThreshold &&
+        pairs <= 8L * localThreshold) {
       val minCount = math.ceil(minSupport * n).toLong
       val collected = baskets.select($"items".cast("array<long>"))
         .as[Array[Long]].collect()

@@ -36,7 +36,7 @@ object KCore {
     import spark.implicits._
     var e = edges.select($"u1".as("src"), $"u2".as("dst"))
       .unionAll(edges.select($"u2".as("src"), $"u1".as("dst")))
-      .localCheckpoint(eager = true)
+      .localCheckpoint(eager = false)
     var prevEdges = e.count()
     // Hybrid endgame ([[PageRank]] round-18 discipline): the identical
     // peeling rounds over driver arrays below the edge budget — integer

@@ -139,10 +139,10 @@ object PageRank {
         edges.select($"src".cast("long"), $"dst".cast("long"), $"w".cast("double"))
       else
         edges.select($"src".cast("long"), $"dst".cast("long"), lit(1.0).as("w")))
-      .localCheckpoint(eager = true)
-    // Hybrid endgame (see `localThreshold` scaladoc): the edge count is a
-    // count over just-cached blocks — the frame every downstream branch
-    // needs materialized anyway.
+      .localCheckpoint(eager = false)
+    // Hybrid endgame (see `localThreshold` scaladoc): the edge count is the
+    // job that materializes the checkpoint blocks — the frame every
+    // downstream branch needs materialized anyway.
     if (e.count() <= localThreshold) {
       val rows = e.as[(Long, Long, Double)].collect()
       val (out, it) = runLocal(spark, rows, damping, iterations, tol, checkEvery)
@@ -150,7 +150,7 @@ object PageRank {
       return (out, it)
     }
     val verts = e.select($"src".as("id")).unionAll(e.select($"dst".as("id")))
-      .distinct().localCheckpoint(eager = true)
+      .distinct().localCheckpoint(eager = false)
     val n = verts.count().toDouble
     // out-"degree" = Σw per src — with w ≡ 1 this IS the edge count, so
     // the unweighted semantics are unchanged bit-for-bit in structure

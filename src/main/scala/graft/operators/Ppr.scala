@@ -79,7 +79,7 @@ object Ppr {
           checkEvery: Int = 3, localThreshold: Long = 1L << 20): DataFrame = {
     import spark.implicits._
     val e = edges.select($"src".cast("long"), $"dst".cast("long"))
-      .localCheckpoint(eager = true)
+      .localCheckpoint(eager = false)
     if (e.count() <= localThreshold) {
       val rows = e.as[(Long, Long)].collect()
       val seedIds = seeds.select($"id".cast("long")).distinct()
@@ -93,7 +93,7 @@ object Ppr {
       .distinct().localCheckpoint(eager = true)
     val seedSet = seeds.select($"id".cast("long"))
       .join(verts, Seq("id"), "left_semi").distinct()
-      .localCheckpoint(eager = true)
+      .localCheckpoint(eager = false)
     val nSeeds = seedSet.count().toDouble
     require(nSeeds > 0, "PPR needs at least one seed present in the graph")
     val flagged = verts.join(seedSet.withColumn("is_seed", lit(true)),

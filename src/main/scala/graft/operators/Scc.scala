@@ -128,7 +128,7 @@ object Scc {
     import spark.implicits._
     var r = edges.select($"src", $"dst")
       .filter($"src" =!= $"dst").distinct()
-      .localCheckpoint(eager = true)
+      .localCheckpoint(eager = false)
     var prev = r.count()
     var i = 0
     var done = prev == 0L
@@ -140,7 +140,7 @@ object Scc {
             .select(col("a.src").as("src"), col("b.dst").as("dst"))
             .filter($"src" =!= $"dst"))
         .distinct()
-        .localCheckpoint(eager = true)
+        .localCheckpoint(eager = false)
       val n = next.count()
       done = n == prev
       prev = n

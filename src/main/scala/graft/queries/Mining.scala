@@ -234,9 +234,11 @@ object Mining extends QueryGroup {
       // bar empties the key (minSupport 0.1%: 0 size ≥ 2 itemsets, 0.5 s;
       // 1%: 0, 0.4 s; minCount 2: 3573 itemsets, 4.3 s). The 4.3 s IS the
       // price of the declared output.
-      // eager checkpoint: the count below plus FPGrowth.fit's two passes
+      // checkpoint: the budget aggregate plus FPGrowth.fit's two passes
       // would otherwise re-run the scan + distinct + collect_set shuffle
-      // three times (MLlib warns "input is not cached" for exactly this)
+      // three times (MLlib warns "input is not cached" for exactly this);
+      // lazy, because the budget aggregate materializes the blocks in the
+      // same job that counts the baskets
       // Round-19 (guide §1.2 step 1): the fit routes through
       // [[graft.operators.FreqItemsets]] — a driver-local Eclat DFS below
       // the occurrence budget (the itemset multiset is a set property of
@@ -245,9 +247,8 @@ object Mining extends QueryGroup {
       val baskets = t(s, dir, "lineitem")
         .select($"l_orderkey", $"l_partkey").distinct()
         .groupBy($"l_orderkey").agg(collect_set($"l_partkey").as("items"))
-        .localCheckpoint(eager = true)
-      val n = baskets.count()
-      graft.operators.FreqItemsets.run(s, baskets, 2.0 / n)
+        .localCheckpoint(eager = false)
+      graft.operators.FreqItemsets.runWith(s, baskets, n => 2.0 / n)
         .withColumn("sz", size($"items"))
         .filter($"sz" >= 2)
         .groupBy($"sz".as("size"))

@@ -1494,7 +1494,8 @@ object StreamOps {
               coalesce(col("segment"), lit("unknown")).as("segment"))
 
   /** Streaming source over a parquet events directory (library surface;
-    * tests use MemoryStream instead). Schema-adaptive like [[graft.Tables]]:
+    * tests use MemoryStream instead). Schema from [[graft.Tables.read]]'s
+    * process-wide cache; schema-adaptive like [[graft.Tables]]:
     * ts may be raw Long ns (nanosAsLong era), TIMESTAMP_NTZ (timestamp[us]
     * files), or TIMESTAMP — all normalized to a µs-epoch `ts_us` long. */
   def eventStream(spark: SparkSession, dir: String): DataFrame = {
@@ -1503,7 +1504,7 @@ object StreamOps {
     require(spark.conf.get("spark.sql.session.timeZone") == "UTC",
       "eventStream requires spark.sql.session.timeZone=UTC (pin it at " +
         "session construction); refusing to mutate session config")
-    val raw = spark.read.parquet(s"$dir/events.parquet").schema
+    val raw = graft.Tables.read(spark, s"$dir/events.parquet").schema
     val src = spark.readStream.schema(raw).parquet(s"$dir/events.parquet")
     val tsUs = raw("ts").dataType match {
       case org.apache.spark.sql.types.LongType => expr("ts div 1000")

@@ -54,6 +54,18 @@ class MemoSpec extends BaseSpec {
     assert(memo.getOrCompute(spark, "k") { calls += 1; calls } == 2)
   }
 
+  test("Tables.evict drops the session's table entries; next load re-reads") {
+    val s = spark.newSession()
+    val region = Tables(s, sf, "region")
+    Tables(s, sf, "nation")
+    assert(Tables(s, sf, "region") eq region)
+    assert(Tables.memo.sizeFor(s) == 2)
+    Tables.evict(s)
+    assert(Tables.memo.sizeFor(s) == 0)
+    assert(Tables(s, sf, "region") ne region)
+    Tables.evict(s)
+  }
+
   test("every iterative key self-registers its round counter for Bench") {
     // Bench attributes slow iterative keys via LastIterations; the
     // bindings register at query-group init, which SparkEntry.queries

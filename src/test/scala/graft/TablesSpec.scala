@@ -66,4 +66,90 @@ class TablesSpec extends BaseSpec {
       df.select(cols.map(org.apache.spark.sql.functions.col): _*).limit(1).collect()
     }
   }
+
+  /** Spark jobs started while `f` runs, counted by a listener. The listener
+    * bus is asynchronous, so a marker job follows `f`; once the listener
+    * has seen the marker, it has seen every job started before it. */
+  private def jobsDuring(f: => Unit): Int = {
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(Option(j.properties.getProperty("spark.jobGroup.id")).getOrElse(""))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(l)
+    try {
+      sc.setJobGroup("tables-spec-load", "load")
+      try f finally sc.clearJobGroup()
+      sc.setJobGroup("tables-spec-marker", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      var spins = 0
+      while (!groups.contains("tables-spec-marker") && spins < 300) { Thread.sleep(20); spins += 1 }
+      assert(groups.contains("tables-spec-marker"), "listener never saw the marker job")
+      groups.toArray.count(_ == "tables-spec-load")
+    } finally sc.removeSparkListener(l)
+  }
+
+  test("a second session opens every table without a Spark job, same schemas") {
+    val s1 = spark.newSession()
+    val s2 = spark.newSession()
+    val first = Tables.names.map(t => Tables(s1, sf, t).schema)
+    val again = jobsDuring {
+      assert(Tables.names.map(t => Tables(s2, sf, t).schema) == first)
+      // the streaming source resolves its schema through the same cache
+      graft.streaming.StreamOps.eventStream(s2, sf)
+    }
+    assert(again == 0, s"second session's table loads started $again Spark jobs")
+    Tables.evict(s1); Tables.evict(s2)
+  }
+
+  /** Runs `f` over a temp dir holding table `t` as one parquet FILE (the
+    * layout the schema cache applies to), written by the `put` it passes. */
+  private def withTableFile(f: (String, org.apache.spark.sql.DataFrame => Unit) => Unit): Unit = {
+    import java.nio.file.{Files, StandardCopyOption}
+    val dir = Files.createTempDirectory("tables-spec")
+    var n = 0
+    // Spark writes a directory; move its single part file into place.
+    def put(df: org.apache.spark.sql.DataFrame): Unit = {
+      n += 1
+      val out = dir.resolve(s"w$n").toString
+      df.coalesce(1).write.parquet(out)
+      val part = new java.io.File(out).listFiles().filter(_.getName.endsWith(".parquet")).head
+      Files.move(part.toPath, dir.resolve("t.parquet"), StandardCopyOption.REPLACE_EXISTING)
+    }
+    try f(dir.toString, put)
+    finally Files.walk(dir).sorted(java.util.Comparator.reverseOrder()).forEach(p => Files.delete(p))
+  }
+
+  test("a parquet file rewritten with another schema is re-inferred, never stale") {
+    import spark.implicits._
+    withTableFile { (dir, put) =>
+      put(Seq((1L, "a")).toDF("k", "v"))
+      val s1 = spark.newSession()
+      assert(Tables(s1, dir, "t").columns.toSeq == Seq("k", "v"))
+      put(Seq((2L, 3.5, true)).toDF("k", "x", "flag"))
+      val s2 = spark.newSession()
+      val t2 = Tables(s2, dir, "t")
+      assert(t2.columns.toSeq == Seq("k", "x", "flag"),
+        s"rewritten file served a stale schema: ${t2.schema.simpleString}")
+      assert(t2.as[(Long, Double, Boolean)].collect().toSeq == Seq((2L, 3.5, true)))
+      Tables.evict(s1); Tables.evict(s2)
+    }
+  }
+
+  test("each session gets the schema Spark infers under its parquet settings") {
+    // events.ts is written as timestamp[us] without UTC adjustment: it infers
+    // as TIMESTAMP_NTZ by default and as TIMESTAMP with NTZ inference off, so
+    // a schema cached under one setting must not be served under the other
+    val path = s"$sf/events.parquet"
+    def session(ntz: Boolean) = {
+      val s = spark.newSession()
+      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      s.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", ntz.toString)
+      s
+    }
+    Tables.read(session(ntz = true), path)
+    val off = session(ntz = false)
+    assert(Tables.read(off, path).schema == off.read.parquet(path).schema)
+  }
 }
