@@ -103,37 +103,31 @@ class TablesSpec extends BaseSpec {
     Tables.evict(s1); Tables.evict(s2)
   }
 
-  /** Runs `f` over a temp dir holding table `t` as one parquet FILE (the
-    * layout the schema cache applies to), written by the `put` it passes. */
-  private def withTableFile(f: (String, org.apache.spark.sql.DataFrame => Unit) => Unit): Unit = {
+  test("a parquet file rewritten with another schema is re-inferred, never stale") {
     import java.nio.file.{Files, StandardCopyOption}
+    import spark.implicits._
     val dir = Files.createTempDirectory("tables-spec")
-    var n = 0
-    // Spark writes a directory; move its single part file into place.
-    def put(df: org.apache.spark.sql.DataFrame): Unit = {
-      n += 1
-      val out = dir.resolve(s"w$n").toString
+    // Spark writes a directory; move its single part file into place, so the
+    // table is one parquet FILE, the layout the schema cache applies to.
+    def put(df: org.apache.spark.sql.DataFrame, tag: String): Unit = {
+      val out = dir.resolve(tag).toString
       df.coalesce(1).write.parquet(out)
       val part = new java.io.File(out).listFiles().filter(_.getName.endsWith(".parquet")).head
       Files.move(part.toPath, dir.resolve("t.parquet"), StandardCopyOption.REPLACE_EXISTING)
     }
-    try f(dir.toString, put)
-    finally Files.walk(dir).sorted(java.util.Comparator.reverseOrder()).forEach(p => Files.delete(p))
-  }
-
-  test("a parquet file rewritten with another schema is re-inferred, never stale") {
-    import spark.implicits._
-    withTableFile { (dir, put) =>
-      put(Seq((1L, "a")).toDF("k", "v"))
+    try {
+      put(Seq((1L, "a")).toDF("k", "v"), "v1")
       val s1 = spark.newSession()
-      assert(Tables(s1, dir, "t").columns.toSeq == Seq("k", "v"))
-      put(Seq((2L, 3.5, true)).toDF("k", "x", "flag"))
+      assert(Tables(s1, dir.toString, "t").columns.toSeq == Seq("k", "v"))
+      put(Seq((2L, 3.5, true)).toDF("k", "x", "flag"), "v2")
       val s2 = spark.newSession()
-      val t2 = Tables(s2, dir, "t")
+      val t2 = Tables(s2, dir.toString, "t")
       assert(t2.columns.toSeq == Seq("k", "x", "flag"),
         s"rewritten file served a stale schema: ${t2.schema.simpleString}")
       assert(t2.as[(Long, Double, Boolean)].collect().toSeq == Seq((2L, 3.5, true)))
       Tables.evict(s1); Tables.evict(s2)
+    } finally {
+      Files.walk(dir).sorted(java.util.Comparator.reverseOrder()).forEach(p => Files.delete(p))
     }
   }
 
